@@ -154,9 +154,9 @@ def decode_dimensions(png: bytes) -> tuple[int, int]:
 
 def decode_pixels(png: bytes) -> bytes:
     """Return raw grayscale pixel bytes (filter-0 scanlines stripped).
-    Inflate is bounded to the declared geometry — this fast path sees raw
-    crawl bytes first in media_features/resize_images, so a zlib bomb
-    behind a small IHDR must fail loudly, not MemoryError the executor
+    Inflate is bounded to the declared geometry — this fast path sees
+    page images lifted from crawl PDFs (decode_scan_png_text), so a zlib
+    bomb behind a small IHDR must fail loudly, not MemoryError the executor
     (same rationale as decode_png_gray's bounded inflate below). The
     declared geometry is itself attacker-controlled, so it gets the same
     50 MPix gate as the general decoder; and a first-IDAT inflate that

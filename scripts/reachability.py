@@ -52,6 +52,7 @@ KEEP: dict[str, str] = {
     "gnosis_ocr_spark/functions/codec_media.py:build_webp_lossy_header": FIXTURE,
     "gnosis_ocr_spark/functions/codec_pdf.py:build_pdf_tounicode": FIXTURE,
     "gnosis_ocr_spark/functions/codec_pdf.py:extract_pages": TEST_REFERENCE,
+    "gnosis_ocr_spark/functions/codec_tiff.py:_split_jpeg_datastream": FIXTURE,
     "gnosis_ocr_spark/functions/codec_tiff.py:encode_tiff_gray16": FIXTURE,
     "gnosis_ocr_spark/functions/codec_tiff.py:encode_tiff_gray_jpeg": FIXTURE,
     "gnosis_ocr_spark/functions/codec_tiff.py:encode_tiff_gray_pages": FIXTURE,
@@ -125,48 +126,6 @@ KEEP: dict[str, str] = {
     "gnosis_ocr_spark/sources/warc.py:build_warc": FIXTURE,
     "gnosis_ocr_spark/sources/warc.py:parse_warc_bytes": LATER,
     "gnosis_ocr_spark/sources/warc.py:warc_records": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_BitW": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_Bits": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_crc16": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_crc8": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_crc_table": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_decode_residual": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_decode_subframe": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_encode_residual": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_encode_subframe": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_integrate_fixed": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_pcm_bytes": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_read_coded_number": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:_write_coded_number": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:decode_flac": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:decode_flac_pcm16": LATER,
-    "gnosis_ocr_spark/functions/codec_flac.py:encode_flac": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:_insert_emulation": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:_iter_annexb": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:_iter_length_prefixed": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:_parse_pps": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:_parse_sps": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:_strip_emulation": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:build_avcc": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:decode_h264_frame": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:decode_h264_gray": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:encode_h264_annexb": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:encode_h264_ipcm": LATER,
-    "gnosis_ocr_spark/functions/codec_h264.py:parse_avcc": LATER,
-    "gnosis_ocr_spark/functions/codec_media.py:_mp4_video_samples_impl": LATER,
-    "gnosis_ocr_spark/functions/codec_media.py:build_mp4_h264": LATER,
-    "gnosis_ocr_spark/functions/codec_media.py:build_mp4_video": LATER,
-    "gnosis_ocr_spark/functions/codec_media.py:decode_ico_gray": LATER,
-    "gnosis_ocr_spark/functions/codec_media.py:mp4_video_samples": LATER,
-    "gnosis_ocr_spark/functions/codec_media.py:wav_samples": LATER,
-    "gnosis_ocr_spark/functions/codec_tiff.py:_split_jpeg_datastream": LATER,
-    "gnosis_ocr_spark/functions/codec_vp8l.py:_sub3": LATER,
-    "gnosis_ocr_spark/operators/multimodal.py:_decode_stub_meta": LATER,
-    "gnosis_ocr_spark/operators/multimodal.py:_feature_batches": LATER,
-    "gnosis_ocr_spark/operators/multimodal.py:_resize_gray_nn": LATER,
-    "gnosis_ocr_spark/operators/multimodal.py:media_features": LATER,
-    "gnosis_ocr_spark/operators/multimodal.py:resize_images": LATER,
-    "gnosis_ocr_spark/operators/multimodal.py:sample_frames": LATER,
 }
 
 

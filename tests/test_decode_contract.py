@@ -1,12 +1,13 @@
-"""The decode contract, swept across every media decoder: mutated crawl
+"""The decode contract, swept across every reached media parser and
+decoder: mutated crawl
 bytes raise ValueError (or a subclass — JpegError/TiffError/…), NEVER a
 raw IndexError/StopIteration/struct.error/zlib.error that callers can't
 distinguish from an engine bug, and never RecursionError/MemoryError.
 
-This is the uniform totality property the multimodal operators rely on
-(their except-clauses are deliberately narrow in the codecs' direction),
-found violated in four codecs by a fuzz sweep and pinned here for all of
-them. Deterministic seed; ~100 mutations per format keeps the file under
+This is the uniform totality property media_metadata and the image OCR
+route rely on (their except-clauses are deliberately narrow in the codecs'
+direction), found violated in four codecs by a fuzz sweep and pinned here
+for all of them. Deterministic seed; ~100 mutations per format keeps the file under
 a few seconds."""
 
 from __future__ import annotations
@@ -16,7 +17,6 @@ import pytest
 
 
 def _samples() -> dict[str, bytes]:
-    from gnosis_ocr_spark.functions import codec_flac as FL
     from gnosis_ocr_spark.functions import codec_media as M
     from gnosis_ocr_spark.functions.codec_jpeg import (
         encode_gray_jpeg,
@@ -25,10 +25,10 @@ def _samples() -> dict[str, bytes]:
     from gnosis_ocr_spark.functions.codec_jpx import encode_jp2
     from gnosis_ocr_spark.functions.codec_png import encode_gray_png
     from gnosis_ocr_spark.functions.codec_tiff import encode_tiff_gray
+    from gnosis_ocr_spark.functions.codec_vp8l import encode_webp_lossless_gray
 
     px = bytes((i * 7 + 3) % 256 for i in range(32 * 24))
     g = np.frombuffer(px, np.uint8).reshape(24, 32)
-    sine = np.round(8000 * np.sin(np.arange(2000) / 16)).astype(np.int64)
     return {
         "png": encode_gray_png(px, 32, 24),
         "jpeg": encode_gray_jpeg(px, 32, 24),
@@ -38,22 +38,24 @@ def _samples() -> dict[str, bytes]:
         "tiff": encode_tiff_gray(px, 32, 24, compression="lzw"),
         "jp2": encode_jp2([g]),
         "wav": M.build_wav(np.sin(np.arange(2000) / 20.0).astype(np.float32)),
-        "flac": FL.encode_flac(sine),
+        "webp": encode_webp_lossless_gray(px, 32, 24),
+        "flac": M.build_flac(12000),
         "mp3": M.build_mp3(20),
         "ogg": M.build_ogg_vorbis(8000),
-        "mp4": M.build_mp4_video([b"\x65" * 40] * 4),
+        "mp4": M.build_mp4(2.5),
         "heif": M.build_heif(60, 40),
         "ico": M.build_ico([(g, "dib32")]),
+        "svg": M.build_svg(640, 360, ("axis label",)),
     }
 
 
 def _decoders() -> dict:
-    from gnosis_ocr_spark.functions import codec_flac as FL
     from gnosis_ocr_spark.functions import codec_media as M
     from gnosis_ocr_spark.functions.codec_jpeg import decode_jpeg
     from gnosis_ocr_spark.functions.codec_jpx import decode_jpx_gray
     from gnosis_ocr_spark.functions.codec_png import decode_png_gray
     from gnosis_ocr_spark.functions.codec_tiff import decode_tiff_gray
+    from gnosis_ocr_spark.functions.codec_vp8l import decode_webp_gray
 
     return {
         "png": decode_png_gray,
@@ -63,13 +65,15 @@ def _decoders() -> dict:
         "bmp": M.decode_bmp_gray,
         "tiff": decode_tiff_gray,
         "jp2": decode_jpx_gray,
-        "wav": M.wav_samples,
-        "flac": FL.decode_flac,
+        "webp": decode_webp_gray,
+        "wav": M.wav_info,
+        "flac": M.flac_info,
         "mp3": M.mp3_info,
         "ogg": M.ogg_info,
-        "mp4": M.mp4_video_samples,
+        "mp4": M.mp4_duration,
         "heif": M.heif_info,
-        "ico": M.decode_ico_gray,
+        "ico": M.ico_info,
+        "svg": M.svg_dimensions,
     }
 
 

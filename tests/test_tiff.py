@@ -401,64 +401,41 @@ def test_media_metadata_real_for_tiff_bmp_webp(spark):
     assert (got["webp_l"]["width"], got["webp_l"]["height"]) == (77, 31)
 
 
-def test_media_features_identical_pixels_across_tiff_and_bmp(spark):
+def test_tiff_and_bmp_decode_identical_pixels():
     """The same bilevel page through the G4-fax TIFF decoder and the BMP
-    decoder yields byte-identical pixels ⇒ identical histograms — feature
-    vectors are provably from DECODE, not byte hashes."""
-    from gnosis_ocr_spark.operators.multimodal import media_features
+    decoder (via the image route's decode switch) yields byte-identical
+    pixels, equal to the encoded page."""
+    from gnosis_ocr_spark.operators.multimodal import decode_image_gray
 
     gray = _doc_gray(48, 32)
     bilevel = np.where(gray < 128, 0, 255).astype(np.uint8)
-    rows = [
-        ("tif", bytearray(T.encode_tiff_gray(
-            bilevel.tobytes(), 48, 32, compression="g4", photometric=0))),
-        ("bmp", bytearray(M.encode_gray_bmp(bilevel.tobytes(), 48, 32))),
-    ]
-    df = spark.createDataFrame(rows, schema="url string, data binary")
-    got = {r["url"]: np.array(r["feature"])
-           for r in media_features(df, dim=8).collect()}
-    assert float(np.abs(got["tif"] - got["bmp"]).max()) == 0.0
-    assert float(got["tif"].sum()) == pytest.approx(1.0)
+    tif = T.encode_tiff_gray(
+        bilevel.tobytes(), 48, 32, compression="g4", photometric=0)
+    bmp = M.encode_gray_bmp(bilevel.tobytes(), 48, 32)
+    assert T.decode_tiff_gray(tif) == (48, 32, bilevel.tobytes())
+    assert decode_image_gray(bmp) == T.decode_tiff_gray(tif)
 
 
-
-def _lossy_webp_500x400() -> bytes:
-    import numpy as np
-
+def test_large_tiff_bmp_and_lossy_webp_decode_at_full_size():
+    """A multi-strip G4 TIFF, a BMP and a 500x400 lossy WebP decode at full
+    size: TIFF and BMP to the encoded pixels, the WebP to the encoder's
+    by-construction reconstruction (codec_vp8)."""
     from gnosis_ocr_spark.functions.codec_vp8 import build_webp_lossy
-
-    yy, xx = np.mgrid[0:400, 0:500]
-    return build_webp_lossy(
-        ((yy // 7 * 31 + xx // 9 * 17) % 256).astype(np.uint8), qindex=80)[0]
-
-def test_resize_real_for_tiff_and_bmp(spark):
-    from gnosis_ocr_spark.functions.codec_png import (
-        decode_dimensions,
-        decode_pixels,
-    )
-    from gnosis_ocr_spark.operators.multimodal import resize_images
+    from gnosis_ocr_spark.operators.multimodal import decode_image_gray
 
     gray = _doc_gray(300, 120, seed=13)
-    rows = [
-        ("tif", bytearray(T.encode_tiff_gray(
-            gray.tobytes(), 300, 120, compression="g4", photometric=0,
-            rows_per_strip=50))),
-        ("bmp", bytearray(M.encode_gray_bmp(gray.tobytes(), 300, 120))),
-        ("webp", bytearray(_lossy_webp_500x400())),
-    ]
-    df = spark.createDataFrame(rows, schema="url string, data binary")
-    got = {r["url"]: r.asDict() for r in resize_images(df, max_dim=64).collect()}
-    for k in ("tif", "bmp"):
-        assert got[k]["status"] == "resized"
-        assert max(got[k]["width"], got[k]["height"]) == 64
-        w, h = decode_dimensions(bytes(got[k]["data"]))
-        assert (w, h) == (got[k]["width"], got[k]["height"])
-        decode_pixels(bytes(got[k]["data"]))  # output PNG really decodes
-    # round 5: lossy WebP decodes in-engine (codec_vp8) → real resize
-    assert got["webp"]["status"] == "resized"
-    assert max(got["webp"]["width"], got["webp"]["height"]) == 64
-    w, h = decode_dimensions(bytes(got["webp"]["data"]))
-    assert (w, h) == (got["webp"]["width"], got["webp"]["height"])
+    tif = T.encode_tiff_gray(
+        gray.tobytes(), 300, 120, compression="g4", photometric=0,
+        rows_per_strip=50)
+    assert T.decode_tiff_gray(tif) == (300, 120, gray.tobytes())
+    bmp = M.encode_gray_bmp(gray.tobytes(), 300, 120)
+    assert decode_image_gray(bmp) == (300, 120, gray.tobytes())
+    yy, xx = np.mgrid[0:400, 0:500]
+    webp, recon = build_webp_lossy(
+        ((yy // 7 * 31 + xx // 9 * 17) % 256).astype(np.uint8), qindex=80)
+    w, h, luma = decode_image_gray(webp)
+    assert (w, h) == (500, 400)
+    assert np.array_equal(np.frombuffer(luma, np.uint8).reshape(h, w), recon["y"])
 
 
 def test_tiff_orientation_tag_applies_all_transforms():

@@ -350,59 +350,34 @@ def test_mutation_fuzz_never_hangs_or_segfaults(pos, val):
         pass
 
 
-# -------------------------------------------------------- spark integration
+# -------------------------------------------------------- image route
 
 
-def test_media_features_real_for_lossless_webp(spark):
-    """media_features over a VP8L WebP equals the decoded-luma histogram
-    (the REAL path), and differs from the undecodable-bytes stub."""
-    from gnosis_ocr_spark.operators.multimodal import media_features
+def test_route_decodes_lossless_webp_exactly():
+    """decode_image_gray over a VP8L WebP returns the encoded pixels."""
+    from gnosis_ocr_spark.operators.multimodal import decode_image_gray
 
     gray = _rand_gray(40, 30, seed=5)
     webp = V.encode_webp_lossless_gray(gray, 40, 30)
-    df = spark.createDataFrame(
-        [("u1", bytearray(webp))], "url string, data binary"
-    )
-    row = media_features(df, dim=8).collect()[0]
-    assert row.media_type == "image/webp"
-    px = np.frombuffer(gray, dtype=np.uint8)
-    hist, _ = np.histogram(px, bins=8, range=(0, 256))
-    expected = (hist / len(px)).astype(np.float32)
-    assert np.allclose(row.feature, expected, atol=1e-6)
+    assert decode_image_gray(webp) == (40, 30, gray)
 
 
-def test_resize_images_real_for_lossless_webp(spark):
-    from gnosis_ocr_spark.functions.codec_png import decode_png_gray
-    from gnosis_ocr_spark.operators.multimodal import resize_images
+def test_route_decodes_lossless_gradient_webp():
+    from gnosis_ocr_spark.operators.multimodal import decode_image_gray
 
     gray = _grad_gray(96, 64)
     webp = V.encode_webp_lossless_gray(gray, 96, 64)
-    df = spark.createDataFrame(
-        [("u1", bytearray(webp))], "url string, data binary"
-    )
-    row = resize_images(df, max_dim=32).collect()[0]
-    assert row.status == "resized"
-    assert max(row.width, row.height) <= 32
-    dw, dh, _ = decode_png_gray(bytes(row.data))
-    assert (dw, dh) == (row.width, row.height)
+    assert decode_image_gray(webp) == (96, 64, gray)
 
 
-def test_resize_lossy_webp_decodes_real(spark):
-    # round 5: lossy WebP rides the real decode→resize path (codec_vp8)
-    import numpy as np
-
-    from gnosis_ocr_spark.functions.codec_png import decode_png_gray
+def test_route_decodes_lossy_webp_to_encoder_recon():
+    # lossy WebP rides the image route's decode switch (codec_vp8)
     from gnosis_ocr_spark.functions.codec_vp8 import build_webp_lossy
-    from gnosis_ocr_spark.operators.multimodal import resize_images
+    from gnosis_ocr_spark.operators.multimodal import decode_image_gray
 
     yy, xx = np.mgrid[0:80, 0:120]
     blob, recon = build_webp_lossy(
         ((yy * 3 + xx * 2) % 256).astype(np.uint8), qindex=10)
-    df = spark.createDataFrame(
-        [("u1", bytearray(blob))], "url string, data binary"
-    )
-    row = resize_images(df, max_dim=32).collect()[0]
-    assert row.status == "resized"
-    assert max(row.width, row.height) <= 32
-    dw, dh, _ = decode_png_gray(bytes(row.data))
-    assert (dw, dh) == (row.width, row.height)
+    w, h, luma = decode_image_gray(blob)
+    assert (w, h) == (120, 80)
+    assert np.array_equal(np.frombuffer(luma, np.uint8).reshape(h, w), recon["y"])
