@@ -33,6 +33,10 @@ from gnosis_ocr_spark.functions.text import fingerprint, tokens
 
 LOG = logging.getLogger("gnosis_ocr_spark.dedup")
 
+# near-dup defaults shared by every shingle/sketch operator, batch and stream
+SHINGLE_WORDS = 3  # word-shingle width
+SKETCH_SIZE = 1024  # bottom-s length: Jaccard is exact up to this many shingles
+
 
 def cap_bucket_members(
     df: DataFrame,
@@ -193,7 +197,7 @@ def char_ngrams(text: Column, n: int = 3, max_chars: int = 200) -> Column:
 
 
 def minhash_signature(docs: DataFrame, id_col: str, text_col: str, k: int = 32,
-                      shingle_words: int = 3) -> DataFrame:
+                      shingle_words: int = SHINGLE_WORDS) -> DataFrame:
     """(doc_id, sig array<bigint>): k min-hashes via seeded xxhash64 over
     word shingles — computed with ONE explode + ONE groupBy (k partial mins),
     no per-seed passes over the data. Shingles come from the linear
@@ -280,8 +284,8 @@ def shingle_sketches(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_words: int = 3,
-    sketch_size: int = 1024,
+    shingle_words: int = SHINGLE_WORDS,
+    sketch_size: int = SKETCH_SIZE,
 ) -> DataFrame:
     """(doc_id, sk array<bigint>): the ``sketch_size`` SMALLEST seeded hashes
     of each document's distinct shingle set — a deterministic bottom-s sketch.
@@ -361,8 +365,8 @@ def minhash_near_duplicates(
     bands: int = 8,
     rows: int = 4,
     threshold: float = 0.7,
-    shingle_words: int = 3,
-    sketch_size: int = 1024,
+    shingle_words: int = SHINGLE_WORDS,
+    sketch_size: int = SKETCH_SIZE,
     max_bucket_size: int | None = None,
     sketches: DataFrame | None = None,
 ) -> DataFrame:
@@ -402,8 +406,8 @@ def minhash_star_edges(
     bands: int = 8,
     rows: int = 4,
     threshold: float = 0.7,
-    shingle_words: int = 3,
-    sketch_size: int = 1024,
+    shingle_words: int = SHINGLE_WORDS,
+    sketch_size: int = SKETCH_SIZE,
     sketches: DataFrame | None = None,
 ) -> DataFrame:
     """(a, b, jaccard) verified STAR edges for the clustering consumer —
@@ -674,21 +678,13 @@ def connected_components(
     every clustering call would stack ~3 materialized tables into executor
     storage — measured here as a broad slowdown of every query that shares
     the session afterwards, and at 100 TB the same residue evicts useful
-    cache and forces shuffle spill."""
-    jsc = edges.sparkSession.sparkContext._jsc
-
-    def _persistent_ids() -> set[int]:
-        return {
-            e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()
-        }
-
-    def _unpersist(ids: set[int]) -> None:
-        for e in jsc.getPersistentRDDs().entrySet().toArray():
-            if e.getKey() in ids:
-                e.getValue().unpersist(False)
+    cache and forces shuffle spill. On failure (including the max_iter
+    RuntimeError) every block the call pinned is released."""
+    sc = edges.sparkSession.sparkContext
+    saved: set[int] = set()  # every block id this call pinned (ids never recur)
 
     if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        sc.setCheckpointDir(checkpoint_dir)
 
         def _save(df: DataFrame) -> tuple[DataFrame, set[int]]:
             # reliable checkpoint: files, not storage blocks — cleanup is
@@ -705,9 +701,11 @@ def connected_components(
             # already forbid concurrent Spark jobs in one session
             # (CLAUDE.md); use checkpoint_dir= (reliable checkpoints, no
             # diff) when sharing a session across drivers.
-            before = _persistent_ids()
+            before = _persistent_rdd_ids(sc)
             out = df.localCheckpoint(eager=True)
-            return out, _persistent_ids() - before
+            ids = _persistent_rdd_ids(sc) - before
+            saved.update(ids)
+            return out, ids
 
     # symmetrize with ONE Generate instead of a self-union (r6): the union
     # referenced the lazy ``edges`` plan twice, so the whole upstream
@@ -724,91 +722,96 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    # materialize the symmetrized edge set ONCE: every propagation round
-    # joins against `sym`, and only `labels` was checkpointed — each round
-    # re-executed the whole upstream edge-generation plan (for the dedup
-    # consumers that is minhash → LSH → sketch-verify over the full corpus,
-    # re-run once per round; measured r6 at sf0.1: dedup_clusters 9.0 s →
-    # 3.4 s, curate_compose near-dup leg similar). One extra materialization
-    # job, then every round reads the stored blocks.
-    sym, sym_ids = _save(sym)
-    # initial labels FUSE the first propagation round (r6): comp₀ =
-    # min(id, min neighbor) is exactly what one round of min-propagation
-    # over comp=id produces, computed here in the same groupBy that
-    # deduplicates node ids — every graph converges one round earlier
-    # (one fewer propagation join + checkpoint + fixpoint probe; star
-    # graphs — the dedup topology — now finish with a single loop round).
-    labels = sym.groupBy("src").agg(F.min("dst").alias("_m")).select(
-        F.col("src").alias("id"),
-        F.least(F.col("src"), F.col("_m")).alias("comp"),
-    )
-    labels, cur_ids = _save(labels)
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
+    keep: set[int] = set()
+    try:
+        # materialize the symmetrized edge set ONCE: every propagation round
+        # joins against `sym`, and only `labels` was checkpointed — each round
+        # re-executed the whole upstream edge-generation plan (for the dedup
+        # consumers that is minhash → LSH → sketch-verify over the full corpus,
+        # re-run once per round; measured r6 at sf0.1: dedup_clusters 9.0 s →
+        # 3.4 s, curate_compose near-dup leg similar). One extra materialization
+        # job, then every round reads the stored blocks.
+        sym, _ = _save(sym)
+        # initial labels FUSE the first propagation round (r6): comp₀ =
+        # min(id, min neighbor) is exactly what one round of min-propagation
+        # over comp=id produces, computed here in the same groupBy that
+        # deduplicates node ids — every graph converges one round earlier
+        # (one fewer propagation join + checkpoint + fixpoint probe; star
+        # graphs — the dedup topology — now finish with a single loop round).
+        labels = sym.groupBy("src").agg(F.min("dst").alias("_m")).select(
+            F.col("src").alias("id"),
+            F.least(F.col("src"), F.col("_m")).alias("comp"),
         )
-        # the change FLAG rides the propagation projection (r6): the
-        # fixpoint probe is one integer count over the materialized
-        # table — previously two DECIMAL(38) label-sum jobs per round
-        # compared totals across rounds. A propagation round that lowers
-        # ZERO labels IS the fixpoint (comp(v) ≤ comp(u) both ways
-        # across every edge ⇒ comps constant per component, and the
-        # component min keeps itself — the r5 proof), detected directly.
-        stepped = (
-            labels.join(nbr, labels["id"] == nbr["src"], "left")
-            .select(
-                labels["id"],
-                F.least(
-                    labels["comp"], F.coalesce(F.col("nbr_comp"), labels["comp"])
-                ).alias("comp"),
-                (F.coalesce(F.col("nbr_comp"), labels["comp"])
-                 < labels["comp"]).alias("_chg"),
+        labels, cur_ids = _save(labels)
+        for _ in range(max_iter):
+            nbr = (
+                sym.join(labels, sym["dst"] == labels["id"])
+                .groupBy("src")
+                .agg(F.min("comp").alias("nbr_comp"))
             )
-        )
-        # materialize before the count + self-join below: the fixpoint
-        # check and both sides of the pointer jump reference this plan and
-        # would execute the propagation join repeatedly otherwise
-        stepped, stepped_ids = _save(stepped)
-        n_changed = (
-            stepped.agg(F.sum(F.col("_chg").cast("int"))).collect()[0][0]
-        )
-        stepped = stepped.select("id", "comp")
-        if not n_changed:  # 0, or None on an empty edge set
-            # propagation fixpoint ⇒ fully converged (docstring proof);
-            # the pointer-jump join is pure acceleration and is skipped
-            _unpersist(cur_ids)
-            labels, cur_ids = stepped, stepped_ids
-            break
-        # pointer jumping: follow the label's own label (comp[comp]) — the
-        # doubling step that turns O(diameter) convergence into O(log d)
-        parent = stepped.select(
-            F.col("id").alias("pid"), F.col("comp").alias("pcomp")
-        )
-        new_labels = (
-            stepped.join(parent, stepped["comp"] == parent["pid"], "left")
-            .select(
-                stepped["id"],
-                F.least(
-                    stepped["comp"], F.coalesce(F.col("pcomp"), stepped["comp"])
-                ).alias("comp"),
+            # the change FLAG rides the propagation projection (r6): the
+            # fixpoint probe is one integer count over the materialized
+            # table — previously two DECIMAL(38) label-sum jobs per round
+            # compared totals across rounds. A propagation round that lowers
+            # ZERO labels IS the fixpoint (comp(v) ≤ comp(u) both ways
+            # across every edge ⇒ comps constant per component, and the
+            # component min keeps itself — the r5 proof), detected directly.
+            stepped = (
+                labels.join(nbr, labels["id"] == nbr["src"], "left")
+                .select(
+                    labels["id"],
+                    F.least(
+                        labels["comp"], F.coalesce(F.col("nbr_comp"), labels["comp"])
+                    ).alias("comp"),
+                    (F.coalesce(F.col("nbr_comp"), labels["comp"])
+                     < labels["comp"]).alias("_chg"),
+                )
             )
-        )
-        new_labels, new_ids = _save(new_labels)
-        # this round's intermediate + the superseded label table are dead
-        # now that new_labels is materialized
-        _unpersist(stepped_ids | cur_ids)
-        labels, cur_ids = new_labels, new_ids
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(pointer-jumping covers diameter ~2^rounds — this indicates a bug "
-            "or an adversarial graph, not normal dedup input)"
-        )
-    # the final label table no longer references sym — drop its blocks now
-    # (same eager-cleanup rationale as the superseded label tables)
-    _unpersist(sym_ids)
+            # materialize before the count + self-join below: the fixpoint
+            # check and both sides of the pointer jump reference this plan and
+            # would execute the propagation join repeatedly otherwise
+            stepped, stepped_ids = _save(stepped)
+            n_changed = (
+                stepped.agg(F.sum(F.col("_chg").cast("int"))).collect()[0][0]
+            )
+            stepped = stepped.select("id", "comp")
+            if not n_changed:  # 0, or None on an empty edge set
+                # propagation fixpoint ⇒ fully converged (docstring proof);
+                # the pointer-jump join is pure acceleration and is skipped
+                _unpersist_rdd_ids(sc, cur_ids)
+                labels, cur_ids = stepped, stepped_ids
+                break
+            # pointer jumping: follow the label's own label (comp[comp]) — the
+            # doubling step that turns O(diameter) convergence into O(log d)
+            parent = stepped.select(
+                F.col("id").alias("pid"), F.col("comp").alias("pcomp")
+            )
+            new_labels = (
+                stepped.join(parent, stepped["comp"] == parent["pid"], "left")
+                .select(
+                    stepped["id"],
+                    F.least(
+                        stepped["comp"], F.coalesce(F.col("pcomp"), stepped["comp"])
+                    ).alias("comp"),
+                )
+            )
+            new_labels, new_ids = _save(new_labels)
+            # this round's intermediate + the superseded label table are dead
+            # now that new_labels is materialized
+            _unpersist_rdd_ids(sc, stepped_ids | cur_ids)
+            labels, cur_ids = new_labels, new_ids
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                "(pointer-jumping covers diameter ~2^rounds — this indicates a bug "
+                "or an adversarial graph, not normal dedup input)"
+            )
+        keep = cur_ids
+    finally:
+        # success keeps only the returned label table, so this drops the
+        # symmetrized edge set (same eager-cleanup rationale as the
+        # superseded label tables); failure keeps nothing
+        _unpersist_rdd_ids(sc, saved - keep)
     return labels.select("id", F.col("comp").alias("component"))
 
 
@@ -845,8 +848,8 @@ def duplicate_clusters(
     gen = {"star": minhash_star_edges, "pairs": minhash_near_duplicates}[edge_mode]
     sketches = shingle_sketches(
         docs, id_col, text_col,
-        minhash_kwargs.get("shingle_words", 3),
-        minhash_kwargs.get("sketch_size", 1024),
+        minhash_kwargs.get("shingle_words", SHINGLE_WORDS),
+        minhash_kwargs.get("sketch_size", SKETCH_SIZE),
     )
     sc = docs.sparkSession.sparkContext
     if checkpoint_dir is not None:
@@ -856,15 +859,17 @@ def duplicate_clusters(
         before = _persistent_rdd_ids(sc)
         sk = sketches.localCheckpoint(eager=True)
         sk_ids = _persistent_rdd_ids(sc) - before
-    edges = gen(
-        docs, id_col=id_col, text_col=text_col, threshold=threshold,
-        sketches=sk, **minhash_kwargs,
-    ).select("a", "b")
-    labels = connected_components(edges, checkpoint_dir=checkpoint_dir)
-    # the label table no longer references the sketch frame (the edge set
-    # was materialized inside connected_components) — drop its blocks now
-    _unpersist_rdd_ids(sc, sk_ids)
-    return labels
+    try:
+        edges = gen(
+            docs, id_col=id_col, text_col=text_col, threshold=threshold,
+            sketches=sk, **minhash_kwargs,
+        ).select("a", "b")
+        return connected_components(edges, checkpoint_dir=checkpoint_dir)
+    finally:
+        # the label table no longer references the sketch frame (the edge
+        # set was materialized inside connected_components) — drop its
+        # blocks now, and on the failure path too
+        _unpersist_rdd_ids(sc, sk_ids)
 
 
 def duplicate_clusters_seeded(
@@ -873,7 +878,7 @@ def duplicate_clusters_seeded(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 1.0,
-    shingle_words: int = 3,
+    shingle_words: int = SHINGLE_WORDS,
     checkpoint_dir: str | None = None,
     **minhash_kwargs,
 ) -> DataFrame:
@@ -1055,13 +1060,14 @@ def decontaminate(
 
 def row_sketch(
     toks: Column,
-    shingle_words: int = 3,
-    sketch_size: int = 1024,
+    shingle_words: int = SHINGLE_WORDS,
+    sketch_size: int = SKETCH_SIZE,
 ) -> Column:
     """The bottom-s shingle sketch as a PER-ROW pure Column expression —
     the stream-safe form of :func:`shingle_sketches` (no explode, no
     groupBy): shingle positions come from one sequence, hashes sort and
-    slice in-row. Unit-tested equal to the batch aggregation path.
+    slice in-row. Unit-tested against an independent reference (Python
+    shingling, one-column xxhash64 per shingle, distinct sorted bottom-s).
 
     ``toks`` MUST be a MATERIALIZED token array column referenced at least
     twice in the enclosing plan (the HOF lambdas below re-evaluate

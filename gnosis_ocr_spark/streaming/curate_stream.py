@@ -37,7 +37,7 @@ from gnosis_ocr_spark.functions.classifier import (
     quality_score_expr,
     unigram_lm_score_static,
 )
-from gnosis_ocr_spark.functions.dedup import row_sketch
+from gnosis_ocr_spark.functions.dedup import SHINGLE_WORDS, row_sketch
 from gnosis_ocr_spark.functions.text import (
     gopher_flags,
     repetition_bp,
@@ -135,7 +135,7 @@ def start_curation_stream(
 def near_dup_within_watermark(
     docs: DataFrame,
     watermark: str = "30 minutes",
-    shingle_words: int = 3,
+    shingle_words: int = SHINGLE_WORDS,
     sketch_size: int = 256,
 ) -> DataFrame:
     """Streaming near-dup filter: the FIRST document with each bottom-s

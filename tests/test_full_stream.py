@@ -206,21 +206,53 @@ def test_static_lm_matches_self_trained(spark):
 
 
 def test_row_sketch_matches_batch_sketches(spark):
-    from gnosis_ocr_spark.functions.dedup import row_sketch, shingle_sketches
+    """row_sketch against an independent reference: shingles built in
+    Python from the collected token arrays, each hashed by a one-column
+    ``xxhash64(shingle, 99)`` select, then the sorted distinct bottom-s
+    taken in Python. The batch path (shingle_sketches) must agree too."""
+    from gnosis_ocr_spark.functions.dedup import (
+        SHINGLE_WORDS,
+        SKETCH_SIZE,
+        row_sketch,
+        shingle_sketches,
+    )
     from gnosis_ocr_spark.functions.text import tokens
 
     docs = _curation_corpus(spark).select("doc_id", "text")
     ltoks = F.filter(tokens(F.lower(F.col("text"))), lambda t: F.length(t) > 0)
-    got = {
-        r["doc_id"]: list(r["sk"])
-        for r in docs.withColumn("_ltoks", ltoks)
-        .select("doc_id", row_sketch(F.col("_ltoks")).alias("sk"))
+    rows = (
+        docs.withColumn("_ltoks", ltoks)
+        .select("doc_id", "_ltoks", row_sketch(F.col("_ltoks")).alias("sk"))
+        .collect()
+    )
+    got = {r["doc_id"]: list(r["sk"]) for r in rows}
+
+    n = SHINGLE_WORDS
+    shingles = {
+        r["doc_id"]: [
+            " ".join(r["_ltoks"][i : i + n])
+            for i in range(len(r["_ltoks"]) - n + 1)
+        ]
+        for r in rows
+    }
+    distinct = sorted({sh for shs in shingles.values() for sh in shs})
+    hashed = {
+        r["s"]: r["h"]
+        for r in spark.createDataFrame([(sh,) for sh in distinct], "s string")
+        .select("s", F.xxhash64("s", F.lit(99)).alias("h"))
         .collect()
     }
-    want = {r["doc_id"]: list(r["sk"]) for r in shingle_sketches(docs).collect()}
+    want = {
+        d: sorted({hashed[sh] for sh in shs})[:SKETCH_SIZE]
+        for d, shs in shingles.items()
+    }
+    assert got == want
+    # repeated shingles exist, so the in-row distinct step is exercised
+    assert any(len(set(shs)) < len(shs) for shs in shingles.values())
+
+    batch = {r["doc_id"]: list(r["sk"]) for r in shingle_sketches(docs).collect()}
     # batch path emits no row for docs with < n tokens; row form emits []
-    want_full = {d: want.get(d, []) for d in got}
-    assert got == want_full
+    assert {d: batch.get(d, []) for d in got} == got
 
 
 def test_streaming_curation_reproduces_batch_decision(spark, tmp_path):

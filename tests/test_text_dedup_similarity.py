@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from gnosis_ocr_spark.functions.dedup import (
@@ -453,6 +454,41 @@ def test_duplicate_clusters_sketch_checkpoint_cleaned(spark):
     assert 20 not in got  # singleton not emitted
     after = {e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()}
     assert len(after - before) <= 1
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    jsc = spark.sparkContext._jsc
+    return {e.getKey() for e in jsc.getPersistentRDDs().entrySet().toArray()}
+
+
+def test_connected_components_failure_releases_storage(spark):
+    """A 64-node chain cannot converge in one round: max_iter=1 raises
+    RuntimeError, and the symmetrized edge set and label table it pinned
+    are released on that failure path too."""
+    from gnosis_ocr_spark.functions.dedup import connected_components
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(63)], "a long, b long")
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iter=1)
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_duplicate_clusters_failure_releases_sketches(spark, monkeypatch):
+    """When the components step raises, duplicate_clusters still drops the
+    sketch frame it materialized."""
+    from gnosis_ocr_spark.functions import dedup as D
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("components step failed")
+
+    monkeypatch.setattr(D, "connected_components", fail)
+    rows = [(i, "alpha beta gamma delta epsilon zeta") for i in range(4)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="components step failed"):
+        D.duplicate_clusters(df)
+    assert _persistent_rdd_ids(spark) - before == set()
 
 
 def test_lang_id_extended_languages(spark):
