@@ -165,8 +165,8 @@ class _Uses(ast.NodeVisitor):
         base = node.module or ""
         self.modules.add(base)
         for alias in node.names:
-            # `from pkg import module` imports a module; `import x as y`
-            # hides the original name, so count it as used
+            # `from pkg import module` imports a module; `from m import x
+            # as y` hides the original name, so count it as used
             self.modules.add(f"{base}.{alias.name}")
             if alias.asname and alias.asname != alias.name:
                 self.names.add(alias.name)
@@ -213,8 +213,9 @@ def analyze(repo: Path = REPO) -> tuple[list[str], set[str]]:
                 continue
             loaded.add(item)
             tree = modules[item][1]
+            defs = _defs(tree)
             item = ast.Module(
-                body=[n for n in tree.body if n not in _defs(tree)], type_ignores=[]
+                body=[n for n in tree.body if n not in defs], type_ignores=[]
             )
         uses = _Uses()
         uses.visit(item)
