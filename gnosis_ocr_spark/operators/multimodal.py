@@ -13,7 +13,7 @@ Three surfaces, all over opaque ``binary`` payloads:
   (WAV chunks, MP4 mvhd, FLAC STREAMINFO, Ogg granule, MPEG frames). No
   audio or video payload is decoded. ``media_fixture_rows`` builds one
   payload per format with by-construction expected metadata for the
-  ``multimodal_meta`` driver query.
+  ``multimodal_meta`` query.
 - ``decode_image_gray`` — standalone raster image → 8-bit gray pixels for
   the pipeline's image OCR route: PNG, JPEG (baseline + progressive, EXIF
   orientation applied), GIF, BMP, WebP (VP8L lossless and VP8 lossy) and
@@ -34,6 +34,7 @@ MEDIA_META_SCHEMA = (
     "url string, media_type string, byte_len long, width int, height int, "
     "duration_sec double"
 )
+
 _MAGIC = [
     (b"\x89PNG\r\n\x1a\n", "image/png"),
     (b"\xff\xd8\xff", "image/jpeg"),

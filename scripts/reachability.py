@@ -3,8 +3,8 @@
 
     python scripts/reachability.py     # lists unreached defs; exit 1 if any
 
-Entry points (roots): the driver contract (``__spark_entry__.py``, which
-reaches every driver query), ``bench.py``, the benchmark (``perfbench/``),
+Entry points (roots): ``__spark_entry__.py`` (which reaches every query in
+``plans/driver_queries.py``), ``bench.py``, the benchmark (``perfbench/``),
 ``scripts/submit_extract.py``, ``run_extraction`` and every public function
 of ``gnosis_ocr_spark/streaming/``.
 
@@ -36,9 +36,9 @@ ROOT_DEFS = {"gnosis_ocr_spark/plans/run.py": ("run_extraction",)}
 PUBLIC_ROOT_DIRS = ("gnosis_ocr_spark/streaming",)
 
 TEST_REFERENCE = "test reference implementation"
-FIXTURE = "fixture builder"
+FIXTURE = "fixture writer"
 READ_API = "public read API"
-LATER = "deletion candidate, later PR"
+LATER = "deletion candidate for a later change"
 
 KEEP: dict[str, str] = {
     "gnosis_ocr_spark/corpus.py:write_corpus": FIXTURE,

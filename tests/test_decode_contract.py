@@ -1,14 +1,14 @@
 """The decode contract, swept across every reached media parser and
-decoder: mutated crawl
-bytes raise ValueError (or a subclass — JpegError/TiffError/…), NEVER a
-raw IndexError/StopIteration/struct.error/zlib.error that callers can't
-distinguish from an engine bug, and never RecursionError/MemoryError.
+decoder: mutated crawl bytes raise ValueError (or a subclass —
+JpegError/TiffError/…), NEVER a raw IndexError/StopIteration/struct.error/
+zlib.error that callers can't distinguish from an engine bug, and never
+RecursionError/MemoryError.
 
 This is the uniform totality property media_metadata and the image OCR
 route rely on (their except-clauses are deliberately narrow in the codecs'
 direction), found violated in four codecs by a fuzz sweep and pinned here
-for all of them. Deterministic seed; ~100 mutations per format keeps the file under
-a few seconds."""
+for all of them. Deterministic seed; ~100 mutations per format keeps the
+file under a few seconds."""
 
 from __future__ import annotations
 
